@@ -18,20 +18,24 @@ readable at t").
 `backfill_functionals` materializes whole functional vectors at every
 (conv_id, anchor_ts) grid point using a per-conversation vectorized kernel:
 for A anchors over N turns it does one sort plus prefix scans — not A
-separate window jobs. Physically it is ONE union-tag shuffle + mapInPandas
-with a group-carry loop (the functionals_kernel batching discipline), not a
-per-conversation cogroup: cogrouped applyInPandas pays ~0.5-1 ms of pandas
-dispatch PER GROUP, which at high conversation cardinality dominates the
-numpy kernel by an order of magnitude.
+separate window jobs. Physically it is ONE union-tag shuffle + the shared
+sorted-group Arrow runner (sorted_groups.map_sorted_groups, the same one
+functionals_kernel uses), not a per-conversation cogroup: cogrouped
+applyInPandas pays ~0.5-1 ms of pandas dispatch PER GROUP, which at high
+conversation cardinality dominates the numpy kernel by an order of
+magnitude.
 """
 
 from __future__ import annotations
+
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.exprcache import expr_memo
 from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.sorted_groups import map_sorted_groups
 
 
 def asof_join(
@@ -100,7 +104,9 @@ def _backfill_probe(value_cols: tuple, families: tuple, options,
                     expanding: bool):
     """(probe keys, feature names, exp/gather/loop family routing,
     key->source map) for backfill_functionals — derived from fixed
-    8-element compute_all probes, pure in its arguments."""
+    8-element compute_all probes, pure in its arguments. Memoized and
+    shared by every caller, so returned as tuples and a read-only
+    mapping."""
     import numpy as np
 
     from opensmile_spark.functionals.batched import (
@@ -141,7 +147,8 @@ def _backfill_probe(value_cols: tuple, families: tuple, options,
                 key_src.setdefault(k, src)
         if residual and fam not in gather_fams:
             gather_fams.append(fam)
-    return probe, feat_names, exp_fams, gather_fams, loop_fams, key_src
+    return (tuple(probe), tuple(feat_names), tuple(exp_fams),
+            tuple(gather_fams), tuple(loop_fams), MappingProxyType(key_src))
 
 
 def backfill_functionals(
@@ -161,16 +168,20 @@ def backfill_functionals(
     place), optionally bounded to a trailing window of `window_seconds`.
 
     Physical strategy: union-tag the turn and anchor tables (side 0 / 1),
-    ONE repartition by conv + in-partition sort, then a single mapInPandas
-    pass whose batches carry the trailing conversation over to the next
-    batch (the functionals_kernel discipline). Each conversation's numpy
-    math is unchanged from the cogroup formulation — same sort order, same
-    per-conv arrays, bit-identical outputs — but the Python/pandas dispatch
-    is amortized over every conversation in an Arrow batch instead of paid
-    per conversation. Per-anchor windows are gathered into ONE concatenated
-    array and every reduceat-expressible family is computed for ALL anchors
-    at once (functionals/batched.py) — no per-anchor Python dispatch; only
-    families outside BATCHED_FAMILIES fall back to a per-anchor loop.
+    ONE repartition by conv + in-partition sort, then a single mapInArrow
+    pass over complete conversations (sorted_groups.map_sorted_groups, the
+    functionals_kernel runner). Each conversation's numpy math is unchanged
+    from the cogroup formulation — same sort order, same per-conv arrays,
+    bit-identical outputs — but the Python dispatch is amortized over every
+    conversation in an Arrow batch instead of paid per conversation. Both
+    time columns are cast to TIMESTAMP, so they cross the boundary as Arrow
+    `timestamp[us, tz=<session zone>]`; the key and anchor_ts are emitted
+    from the anchor rows themselves, so their types round-trip and a NULL
+    `on` key is one conversation. Per-anchor windows are gathered into ONE
+    concatenated array and every reduceat-expressible family is computed
+    for ALL anchors at once (functionals/batched.py) — no per-anchor Python
+    dispatch; only families outside BATCHED_FAMILIES fall back to a
+    per-anchor loop.
     Anchor blocks are chunked so the gathered array stays bounded
     (`max_gather_elems`) regardless of anchor density. Empty windows
     emit NaN features (anchor row is kept so the grid is complete — the
@@ -188,7 +199,6 @@ def backfill_functionals(
     window bound caps the work.
     """
     import numpy as np
-    import pandas as pd
 
     from opensmile_spark.functionals.batched import (
         compute_batched, compute_expanding,
@@ -204,10 +214,6 @@ def backfill_functionals(
     probe, feat_names, exp_fams, gather_fams, loop_fams, key_src = \
         _backfill_probe(tuple(value_cols), tuple(families), options,
                         window_seconds is None)
-    schema = (
-        f"{on} string, {anchor_ts} timestamp, n_visible long, "
-        + ", ".join(f"`{n}` double" for n in feat_names)
-    )
 
     def _one_conv(ts_vals, col_arrays, anchor_vals):
         """Per-conversation math — unchanged from the r5 cogroup
@@ -273,82 +279,55 @@ def backfill_functionals(
             blk_start = blk_end
         return sizes, out_cols
 
-    def _process(pdf: pd.DataFrame):
-        """All conversations in pdf are complete; rows sorted by
+    def _process(batch, starts, ends):
+        """All conversations in batch are complete; rows sorted by
         (__k, __side, __t, __ord): per conv, side-0 turn rows sorted by
         (ts, order) — the cogroup kernel's mergesort order — then side-1
         anchor rows sorted by anchor_ts."""
-        k_np = pdf["__k"].to_numpy()
-        side_np = pdf["__side"].to_numpy()
-        t_np = pdf["__t"].to_numpy()
-        vals = {c: pdf[c].to_numpy(dtype=np.float64) for c in value_cols}
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        change[1:] = k_np[1:] != k_np[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        convs, counts, anchor_chunks, size_chunks = [], [], [], []
+        import pyarrow as pa
+
+        side_np = batch.column("__side").to_numpy()
+        t_np = batch.column("__t").to_numpy(zero_copy_only=False)
+        vals = {c: batch.column(c).to_numpy(zero_copy_only=False)
+                for c in value_cols}
+        anchor_rows, size_chunks = [], []
         feat_chunks: dict[str, list] = {f: [] for f in feat_names}
         for s, e in zip(starts, ends):
             a0 = s + int(np.searchsorted(side_np[s:e], 1, side="left"))
-            anchor_vals = t_np[a0:e]
-            if anchor_vals.size == 0:
+            if a0 == e:
                 continue   # conv has turns but no anchors: no output rows
-            ts_vals = t_np[s:a0]
             col_arrays = {c: vals[c][s:a0] for c in value_cols}
-            sizes, out_cols = _one_conv(ts_vals, col_arrays, anchor_vals)
-            convs.append(k_np[s])
-            counts.append(anchor_vals.size)
-            anchor_chunks.append(anchor_vals)
+            sizes, out_cols = _one_conv(t_np[s:a0], col_arrays, t_np[a0:e])
+            anchor_rows.append(np.arange(a0, e))
             size_chunks.append(sizes)
             for f in feat_names:
                 feat_chunks[f].append(out_cols[f])
-        if not convs:
+        if not anchor_rows:
             return None
-        data = {on: np.repeat(np.array(convs, dtype=object),
-                              np.array(counts, dtype=np.int64)),
-                anchor_ts: np.concatenate(anchor_chunks),
-                "n_visible": np.concatenate(size_chunks)}
-        for f in feat_names:
-            data[f] = np.concatenate(feat_chunks[f])
-        return pd.DataFrame(data, columns=[on, anchor_ts, "n_visible"]
-                            + feat_names)
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the trailing conversation — it may continue in the
-            # next batch (a conv's rows are contiguous: sorted input)
-            kcol = pdf["__k"]
-            mask = (kcol == kcol.iloc[-1]).to_numpy()
-            tail_start = int(np.argmax(mask))
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                out = _process(head)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _process(carry)
-            if out is not None:
-                yield out
+        rows = np.concatenate(anchor_rows)
+        # key and anchor_ts are taken from the anchor rows themselves, so
+        # their Arrow types and NULLs pass through unchanged
+        arrays = [batch.column("__k").take(rows),
+                  batch.column("__t").take(rows),
+                  pa.array(np.concatenate(size_chunks), type=pa.int64())]
+        # from_pandas=True: a NaN feature (e.g. an empty window) is emitted
+        # as NULL, as it always has been
+        arrays += [pa.array(np.concatenate(feat_chunks[f]), type=pa.float64(),
+                            from_pandas=True) for f in feat_names]
+        return pa.RecordBatch.from_arrays(
+            arrays, names=[on, anchor_ts, "n_visible", *feat_names])
 
     left = lld.select(
         F.col(on).alias("__k"),
         F.lit(0).alias("__side"),
-        F.col(ts_col).alias("__t"),
+        F.col(ts_col).cast("timestamp").alias("__t"),
         F.col(order_col).cast("long").alias("__ord"),
         *[F.col(c).cast("double").alias(c) for c in value_cols],
     )
     right = anchors.select(
         F.col(on).alias("__k"),
         F.lit(1).alias("__side"),
-        F.col(anchor_ts).alias("__t"),
+        F.col(anchor_ts).cast("timestamp").alias("__t"),
         F.lit(0).cast("long").alias("__ord"),
         *[F.lit(None).cast("double").alias(c) for c in value_cols],
     )
@@ -357,7 +336,12 @@ def backfill_functionals(
         .repartition(F.col("__k"))
         .sortWithinPartitions("__k", "__side", "__t", "__ord")
     )
-    return merged.mapInPandas(run, schema=schema)
+    schema = (
+        f"`{on}` {merged.schema['__k'].dataType.simpleString()}, "
+        f"`{anchor_ts}` timestamp, n_visible long, "
+        + ", ".join(f"`{n}` double" for n in feat_names)
+    )
+    return map_sorted_groups(merged, ["__k"], schema, _process)
 
 
 def incremental_backfill(

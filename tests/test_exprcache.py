@@ -56,6 +56,30 @@ def test_expr_memo_unhashable_falls_through():
     assert len(calls) == 2          # uncacheable -> direct call each time
 
 
+def test_memoized_probes_are_immutable():
+    """The kernel and backfill probes are memoized, so every caller (and
+    every runner callback closing over them) shares one result: a mutation
+    attempt must raise instead of poisoning later queries."""
+    from opensmile_spark.functionals.bank import _kernel_probe
+    from opensmile_spark.operators.asof import _backfill_probe
+
+    fams = ("means", "regression", "peaks2")
+    probes = [_kernel_probe(("x",), fams, None),
+              _backfill_probe(("x",), fams, None, True)]
+    for probe in probes:
+        *seqs, key_src = probe
+        for seq in seqs:
+            with pytest.raises((AttributeError, TypeError)):
+                seq.append("poison")
+            with pytest.raises(TypeError):
+                seq[0] = "poison"
+        with pytest.raises(TypeError):
+            key_src["x_amean"] = "poison"
+        with pytest.raises((AttributeError, TypeError)):
+            key_src.clear()
+    assert _kernel_probe(("x",), fams, None) is probes[0]
+
+
 ADVERSARIAL = {
     "g_ties": [1.0, 1.0, 1.0, 2.0, 2.0, 3.0],
     "g_zeros": [-0.0, 0.0, -0.0, 0.0, 1.0],
@@ -105,15 +129,19 @@ def test_split_percentiles_bit_exact_vs_direct(spark):
 
 
 def test_split_join_loses_no_groups(spark):
-    """Every group (incl. all-null value groups) must survive the
-    decl-pct inner join with the full aggregate row set."""
+    """Every group (incl. all-null value groups and a NULL group key) must
+    survive the decl-pct join with the full aggregate row set."""
     from opensmile_spark.functionals import functionals_sql
 
-    rows = [(g, i, v) for g, vals in ADVERSARIAL.items()
+    groups = {**ADVERSARIAL, None: [4.0, 1.0, 2.0]}
+    rows = [(g, i, v) for g, vals in groups.items()
             for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, v double")
     out = functionals_sql(df, ["v"]).collect()
-    assert {r["conv_id"] for r in out} == set(ADVERSARIAL)
+    assert len(out) == len(groups)
+    assert {r["conv_id"] for r in out} == set(groups)
     by_g = {r["conv_id"]: r for r in out}
     assert by_g["g_allnull"]["n_turns"] == 3
     assert by_g["g_one"]["v_quartile2"] == 42.5
+    assert by_g[None]["n_turns"] == 3
+    assert by_g[None]["v_quartile2"] == 2.0

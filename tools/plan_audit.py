@@ -43,7 +43,8 @@ def main():
     from opensmile_spark.functionals import functionals_kernel, functionals_sql
     from opensmile_spark.lld import compute_lld
     from opensmile_spark.operators import (
-        asof_join, delta_regression, mvn, sessionize, sma,
+        asof_join, backfill_functionals, delta_regression, mvn, sessionize,
+        sma,
     )
     from opensmile_spark.transcripts import transcripts_from_events
 
@@ -94,7 +95,7 @@ def main():
     fs = functionals_sql(lld, ["char_len"])
     p = plan_str(fs)
     check("functionals_sql no Python",
-          "Python" not in p and "FlatMap" not in p)
+          "Python" not in p and "FlatMap" not in p and "MapIn" not in p)
     n_agg = count(r"HashAggregate|ObjectHashAggregate|SortAggregate", p)
     check("functionals_sql partial+final agg", n_agg >= 2, f"(aggs={n_agg})")
 
@@ -129,6 +130,20 @@ def main():
     check("standard kernel exactly one exchange",
           n_op("Exchange", p) == 1)
 
+    # every per-group kernel crosses the Python boundary through the one
+    # sorted-group Arrow runner: exactly one MapInArrow, no pandas map
+    bf = backfill_functionals(
+        lld, lld.select("conv_id", F.col("ts").alias("anchor_ts")),
+        ["char_len"])
+    for name, df in (("functionals_kernel", fk2),
+                     ("backfill_functionals", bf)):
+        p = plan_str(df)
+        n_map = n_op(r"MapIn\w+", p)
+        check(f"{name} one Arrow map node, no MapInPandas",
+              n_map == 1 and n_op("MapInArrow", p) == 1
+              and n_op("MapInPandas", p) == 0,
+              f"(python map nodes={n_map})")
+
     # round-2 additions -----------------------------------------------------
     from opensmile_spark.dedup import embedding_near_dups
     from opensmile_spark.operators import weighted_sma
@@ -151,7 +166,7 @@ def main():
     p = plan_str(ws)
     check("weighted_sma is one window over the shared conv exchange",
           n_op("Window", p) >= 1 and "pythonUDF" not in p
-          and "ArrowEval" not in p)
+          and "ArrowEval" not in p and "MapIn" not in p)
 
     # round-3 additions -----------------------------------------------------
     from opensmile_spark.similarity import ivf_build, ivf_probe
@@ -201,7 +216,7 @@ def main():
         "doc_id", "top_2gram_frac", "top_3gram_frac", "dup_2gram_ratio"))
     check("repetition_metrics zero-shuffle zero-Python",
           n_op("Exchange", p) == 0
-          and count(r"(?i)python|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)python|ArrowEval|BatchEval|MapInArrow", p) == 0
           and n_op("Generate", p) == 0
           and n_op("HashAggregate", p) == 0,
           f"(exchanges={n_op('Exchange', p)}, generate/agg nodes="
@@ -219,13 +234,13 @@ def main():
     p = plan_str(chunk_documents(docs, max_tokens=32, overlap=8))
     check("chunk_documents narrow zero-shuffle zero-Python",
           n_op("Exchange", p) == 0
-          and count(r"(?i)python|ArrowEval|BatchEval", p) == 0,
+          and count(r"(?i)python|ArrowEval|BatchEval|MapInArrow", p) == 0,
           f"(exchanges={n_op('Exchange', p)}; explode pipelines with scan)")
 
     p = plan_str(pack_concat(token_count(docs), 256, group_cols=["source"]))
     check("pack_concat one exchange zero-Python",
           n_op("Exchange", p) == 1
-          and count(r"(?i)python|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)python|ArrowEval|BatchEval|MapInArrow", p) == 0
           and n_op("Window", p) == 1,
           f"(exchanges={n_op('Exchange', p)}, windows={n_op('Window', p)}; "
           f"group cumsum + bounded span explode)")
@@ -233,7 +248,7 @@ def main():
     p = plan_str(deterministic_shuffle(docs, n_shards=64, seed=1))
     check("deterministic_shuffle one exchange zero-Python",
           n_op("Exchange", p) == 1
-          and count(r"(?i)python|ArrowEval|BatchEval", p) == 0,
+          and count(r"(?i)python|ArrowEval|BatchEval|MapInArrow", p) == 0,
           f"(exchanges={n_op('Exchange', p)}; md5 shard + in-shard "
           f"row_number only)")
 
@@ -251,7 +266,7 @@ def main():
     check("corpus_pipeline broadcast-only joins zero-Python",
           all(j.startswith("Broadcast") for j in joins)
           and count(r"CartesianProduct|SortMergeJoin", p) == 0
-          and count(r"(?i)python|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)python|ArrowEval|BatchEval|MapInArrow", p) == 0
           and n_op("Exchange", p) <= 5,
           f"(joins={joins}, shuffle exchanges={n_op('Exchange', p)} — "
           f"2 carry full corpus rows, rest are derived count streams)")
@@ -267,7 +282,7 @@ def main():
         86400.0, value_cols=["char_len"]))
     check("resample no join node, zero Python",
           count(r"\) \w*Join", p) == 0
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0,
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInArrow", p) == 0,
           f"(union + window merge; exchanges={n_op('Exchange', p)}: "
           f"one per-key window shuffle + the tiny bounds aggregate)")
 
@@ -280,7 +295,7 @@ def main():
     p = plan_str(ivfpq_topk(emb, emb.filter(F.col("vec_id") < 3), k=5,
                             n_centroids=4, n_probe=2, m=8, n_codes=8))
     n_py = (n_op("ArrowEvalPython", p) + n_op("MapInPandas", p)
-            + n_op("FlatMapGroupsInPandas", p))
+            + n_op("MapInArrow", p) + n_op("FlatMapGroupsInPandas", p))
     check("ivfpq JVM-only ADC scoring (Python = 2 encode passes only)",
           n_py == 2 and count(r"CartesianProduct", p) == 0,
           f"(python nodes={n_py}; candidates via cell-key join, "
@@ -297,7 +312,7 @@ def main():
     p = plan_str(line_dedup(docs))
     check("line_dedup linear shuffles, zero Python",
           n_op("Exchange", p) <= 4
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInArrow", p) == 0
           and count(r"CartesianProduct", p) == 0,
           f"(exchanges={n_op('Exchange', p)}; JVM lambda cut)")
 
@@ -326,7 +341,7 @@ def main():
                                 group_cols=["source"]))
     check("pack_sequences two exchanges, zero Python, no join",
           n_op("Exchange", p) <= 2
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInArrow", p) == 0
           and count(r"\) \w*Join", p) == 0,
           f"(exchanges={n_op('Exchange', p)}; window cumsum + pack "
           f"assembly)")
@@ -340,7 +355,7 @@ def main():
     p = plan_str(nb_score(docs, w, params))
     check("nb_score broadcast model join, zero Python",
           n_op("BroadcastHashJoin", p) >= 1
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInArrow", p) == 0
           and count(r"SortMergeJoin|ShuffledHashJoin|CartesianProduct",
                     p) == 0,
           f"(broadcast joins={n_op('BroadcastHashJoin', p)})")
@@ -353,7 +368,8 @@ def main():
     p = plan_str(html_signals(html_to_text(synth_html(docs))))
     check("html_to_text+signals map-only, zero Python, zero shuffle",
           n_op("Exchange", p) == 0
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas", p) == 0
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas"
+                    r"|MapInArrow", p) == 0
           and count(r"\) \w*Join", p) == 0,
           f"(exchanges={n_op('Exchange', p)})")
 
@@ -366,7 +382,8 @@ def main():
     p = plan_str(normalize_url(url_signals(parse_urls(synth_urls(docs)))))
     check("url parse+signals+normalize map-only, zero Python, zero shuffle",
           n_op("Exchange", p) == 0
-          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas", p) == 0
+          and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas"
+                    r"|MapInArrow", p) == 0
           and count(r"\) \w*Join", p) == 0,
           f"(exchanges={n_op('Exchange', p)})")
 
