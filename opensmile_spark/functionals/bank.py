@@ -7,10 +7,12 @@ output naming `<input>_<functional>` :229-266). Two physical strategies here,
 mirroring how cFunctionals shares one min/max/mean/sort pre-pass across all
 sub-components (:349-365):
 
-1. `functionals_kernel` — ONE vectorized numpy kernel computing every
-   enabled family for every value column per group, run over sorted groups
-   by the shared Arrow runner (sorted_groups.map_sorted_groups; the shared
-   pre-pass lives inside kernels.compute_all, since Catalyst cannot CSE
+1. `functionals_kernel` — every enabled family for every value column of
+   every group in an Arrow batch at once, run over sorted groups by the
+   shared Arrow runner (sorted_groups.map_sorted_groups). The groups are
+   handed to batched.compute_windows as windows, which routes each output
+   to a cross-group reduceat path or the per-group kernels.compute_all
+   (the shared pre-pass lives inside those, since Catalyst cannot CSE
    across a UDF boundary — SURVEY.md §4).
 2. `functionals_sql` — pure built-in aggregate expressions for the families
    that are single-pass aggregates (means/moments/extremes/percentiles/
@@ -23,15 +25,13 @@ cross-checkable.
 
 from __future__ import annotations
 
-from types import MappingProxyType
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.batched import compute_windows, route
 from opensmile_spark.sorted_groups import map_sorted_groups
 
 DEFAULT_FAMILIES = [
@@ -58,44 +58,8 @@ DERIVE_OPS = {
 
 def feature_names(value_cols, families=None, options=None) -> list[str]:
     """Static output names (<input>_<functional>, functionals.cpp:236-241)."""
-    probe = compute_all(np.arange(1.0, 9.0), families or DEFAULT_FAMILIES,
-                        options)
-    return [f"{c}_{k}" for c in value_cols for k in probe]
-
-
-@expr_memo
-def _kernel_probe(lane_names: tuple, families: tuple, options):
-    """(feats, probe_keys, batched_fams, loop_fams, key_src) for
-    functionals_kernel — all derived from fixed 8-element compute_all
-    probes, pure in (lane_names, families, options). Memoized and shared
-    by every caller, so returned as tuples and a read-only mapping."""
-    feats = feature_names(list(lane_names), list(families), options)
-    probe_keys = list(compute_all(np.arange(1.0, 9.0), list(families),
-                                  options))
-
-    # families vectorizable ACROSS groups (batched.py); a family stays on
-    # the fast path when all its options are implemented there (equality
-    # pinned by tests/test_batched_kernels.py), else falls back per-group
-    from opensmile_spark.functionals.batched import (
-        BATCHED_FAMILIES, BATCHED_SUPPORTED_OPTIONS,
-    )
-
-    opt = options or {}
-    batched_fams = [
-        f for f in families
-        if f in BATCHED_FAMILIES
-        and set(opt.get(f, {})) <= BATCHED_SUPPORTED_OPTIONS[f]
-    ]
-    loop_fams = [f for f in families if f not in batched_fams]
-    # which probe keys come from which path (first-writer wins like
-    # compute_all's dict: iterate families in order, keep first producer)
-    key_src: dict[str, str] = {}
-    for fam in families:
-        sample = compute_all(np.arange(1.0, 9.0), [fam], options)
-        for k in sample:
-            key_src.setdefault(k, "batched" if fam in batched_fams else "loop")
-    return (tuple(feats), tuple(probe_keys), tuple(batched_fams),
-            tuple(loop_fams), MappingProxyType(key_src))
+    keys = route(families or DEFAULT_FAMILIES, options, False).keys
+    return [f"{c}_{k}" for c in value_cols for k in keys]
 
 
 def functionals_kernel(
@@ -158,15 +122,7 @@ def functionals_kernel(
                              f"have {sorted(DERIVE_OPS)}")
     lanes = [(c, None) for c in value_cols] + [
         (f"{c}__{op}", (c, op)) for c in value_cols for op in derive]
-    lane_names = [ln for ln, _ in lanes]
-    # probe metadata is a pure function of (lanes, families, options) and
-    # costs several compute_all numpy probes per construction — memoized
-    # (exprcache) so repeated query builds skip it
-    feats, probe_keys, batched_fams, loop_fams, key_src = _kernel_probe(
-        tuple(lane_names), tuple(families), options)
-
-    from opensmile_spark.functionals.batched import compute_batched
-
+    feats = feature_names([ln for ln, _ in lanes], families, options)
     key_schema = ", ".join(
         f"`{c}` {df.schema[c].dataType.simpleString()}" for c in group_cols
     )
@@ -174,7 +130,6 @@ def functionals_kernel(
         f"`{n}` double" for n in feats
     )
     out_cols = [*group_cols, "n_turns", *feats]
-    opt = options or {}
 
     def process(batch, starts, ends):
         """Every group in `batch` is complete; rows already sorted."""
@@ -189,24 +144,12 @@ def functionals_kernel(
             else:
                 src, op = spec
                 xs = DERIVE_OPS[op](base[src])
-            if batched_fams:
-                bat = compute_batched(xs, starts, ends, batched_fams, opt)
-            else:
-                bat = {}
-            loop_rows = None
-            if loop_fams:
-                loop_rows = {k: np.empty(starts.size) for k in probe_keys
-                             if key_src[k] == "loop"}
-                for gi, (s, e) in enumerate(zip(starts, ends)):
-                    got = compute_all(xs[s:e], loop_fams, options)
-                    for k in loop_rows:
-                        loop_rows[k][gi] = got[k]
+            # the groups tile the batch: each window is one group
+            out = compute_windows(xs, starts, ends, families, options)
             # from_pandas=True: a NaN functional is emitted as NULL, as it
             # always has been
-            for k in probe_keys:
-                v = bat[k] if key_src[k] == "batched" else loop_rows[k]
-                arrays.append(pa.array(v, type=pa.float64(),
-                                       from_pandas=True))
+            arrays += [pa.array(v, type=pa.float64(), from_pandas=True)
+                       for v in out.values()]
         return pa.RecordBatch.from_arrays(arrays, names=out_cols)
 
     in_cols = group_cols + value_cols

@@ -15,22 +15,28 @@ Numerical discipline: central moments are computed exactly as kernels.py
 does (sum((x-mean)^k)), NOT via raw-moment expansion (which catastrophically
 cancels for large means like reply-latency epochs). Equality with the
 per-group path is pinned by tests/test_batched_kernels.py at rtol 1e-12.
+
+This module also owns the routing: `route` decides which path computes each
+output key (prefix scan, reduceat over gathered windows, or the per-window
+kernels), and `compute_windows` runs all three over any set of windows —
+the functional bank's tiling groups and the backfill's point-in-time
+windows alike.
 """
 
 from __future__ import annotations
 
+from types import MappingProxyType
+from typing import Mapping, NamedTuple
+
 import numpy as np
 
-BATCHED_FAMILIES = {
-    "means", "moments", "extremes", "percentiles", "regression", "crossings",
-    "times", "samples", "dct", "onset", "segments", "peaks2",
-    "lpc", "acf", "amdf", "modulation", "peaks", "lsp", "formants",
-}
+from opensmile_spark.exprcache import expr_memo
+from opensmile_spark.functionals.kernels import compute_all
 
-# per-family options the batched path implements with kernel-equal results;
-# a family with any OTHER option falls back to the per-group reference path
-# (bank.py consults this so e.g. eGeMAPS-style custom percentiles keep the
-# reduceat fast path instead of evicting the family)
+# per-family options the batched path implements with kernel-equal results,
+# one entry per kernels.FAMILIES family; a family with any OTHER option
+# falls back to the per-window reference path (so e.g. eGeMAPS-style custom
+# percentiles keep the reduceat fast path instead of evicting the family)
 BATCHED_SUPPORTED_OPTIONS = {
     "means": {"timeNorm", "T"},
     "moments": set(),
@@ -264,7 +270,8 @@ def _expanding_select(x, his, targets, B=_CHAN_B, W=256, chunk=8192):
             # position is in-window (the count increments only there), so
             # it IS the t-th smallest element of x[0:h]
             j_star = (cum < t[:, None]).sum(axis=1)
-            outs.append(sorted_vals[j_star])
+            # float64 whatever x's dtype, like the coarse path's outputs
+            outs.append(sorted_vals[j_star].astype(np.float64, copy=False))
         return outs
     order = np.argsort(x, kind="stable")          # rank -> index
     sorted_vals = x[order]
@@ -373,7 +380,7 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     Cuy/Cvy/Cuv with u=i, v=i^2 — valid because every expanding window
     shares origin 0, so the regressors are global prefixes too). The two
     mean-|residual| outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly
-    per-window and are NOT returned — the caller routes them to the gather.
+    per-window and are NOT returned — `route` sends them to the gather.
     Percentiles use the exact offline order-statistic machinery
     (_expanding_select) — bit-identical to sorting each window, never the
     gather. Same output names, guards, and formulas as kernels.py
@@ -1231,8 +1238,10 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     np.add.reduceat silently returns x[starts[i]] for an empty segment (and
     raises for starts[i] == x.size), so empty groups are rejected here
     rather than producing wrong numbers. Returns {functional_name:
-    per-group array} for the requested subset of BATCHED_FAMILIES, names
-    identical to kernels.py outputs."""
+    per-group array} for the requested families, names identical to
+    kernels.py outputs. Options outside BATCHED_SUPPORTED_OPTIONS are not
+    implemented here; `route` sends such families to the per-window
+    kernels."""
     options = options or {}
     if not (ends > starts).all():
         raise ValueError("compute_batched: empty group slice "
@@ -1835,4 +1844,130 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
             if k not in out:        # first-writer-wins like compute_all
                 out[k] = v
 
+    return out
+
+
+# ---------------------------------------------------------------------------
+# routing and the one entry point over arbitrary windows
+# ---------------------------------------------------------------------------
+
+# windows are gathered into blocks of at most this many elements (~128 MB of
+# float64), however densely they overlap; tests monkeypatch it to split
+_GATHER_CAP = 16_000_000
+
+
+class Routes(NamedTuple):
+    """Which path writes each output key, and the families each path runs.
+
+    `keys` are in compute_all order; `source` maps each key to "exp"
+    (prefix scan, compute_expanding), "batched" (reduceat over gathered
+    windows, compute_batched) or "loop" (compute_all per window)."""
+    keys: tuple
+    source: Mapping[str, str]
+    exp: tuple
+    gather: tuple
+    loop: tuple
+
+
+@expr_memo
+def route(families, options, expanding: bool) -> Routes:
+    """Route every output key of `families` to one path, from fixed
+    8-element compute_all probes — pure in its arguments, memoized and
+    shared by every caller, hence immutable.
+
+    A family is batched when all its options are in
+    BATCHED_SUPPORTED_OPTIONS, else it runs per window. On expanding
+    windows the EXPANDING_FAMILIES among the batched ones take the prefix
+    path, except EXPANDING_UNSUPPORTED_KEYS, which keep the gather (their
+    family then runs on both). Keys produced by several families keep the
+    first requested family's path, like compute_all's first-writer-wins."""
+    probe = np.arange(1.0, 9.0)
+    options = options or {}
+    keys = tuple(compute_all(probe, list(families), options))
+    batched = [f for f in families
+               if set(options.get(f, {})) <= BATCHED_SUPPORTED_OPTIONS[f]]
+    exp = [f for f in batched if f in EXPANDING_FAMILIES] \
+        if expanding else []
+    gather = [f for f in batched if f not in exp]
+    source: dict[str, str] = {}
+    for fam in families:
+        src = ("exp" if fam in exp else
+               "batched" if fam in batched else "loop")
+        for k in compute_all(probe, [fam], options):
+            if src == "exp" and k in EXPANDING_UNSUPPORTED_KEYS:
+                source.setdefault(k, "batched")
+                if fam not in gather:
+                    gather.append(fam)
+            else:
+                source.setdefault(k, src)
+    loop = tuple(f for f in families if f not in batched)
+    return Routes(keys, MappingProxyType(source), tuple(exp), tuple(gather),
+                  loop)
+
+
+def compute_windows(x: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+                    families, options=None,
+                    expanding: bool = False) -> dict[str, np.ndarray]:
+    """Functionals of every window x[lo[i]:hi[i]]: {key: float64 array}
+    with the keys in compute_all order and NaN for an empty window.
+    `expanding` promises that every window starts at 0 (lo == 0).
+
+    Each key is computed by the path `route` gives it. Windows are
+    gathered into one concatenated array per block of at most _GATHER_CAP
+    elements, so overlapping windows cost their total size but never more
+    memory than the cap; windows that tile x (the bank's groups) gather x
+    itself. Per-window outputs do not depend on the blocking.
+
+    Cost model per family for A windows over N elements: on EXPANDING
+    windows, means/extremes/moments/percentiles and all regression keys
+    except the two |residual| means are O(N + A*B) via the prefix,
+    blocked-Chan and offline order-statistic paths (compute_expanding) —
+    linear in N, never O(sum of window sizes). The two |residual|-mean
+    regression keys (a per-window fit applied to every element, which is
+    irreducibly gather-shaped) and every other batched family cost the
+    total window size; bounded windows cap that. Families routed to the
+    loop pay one compute_all call per window."""
+    r = route(families, options, expanding)
+    options = options or {}
+    if expanding and np.any(lo):
+        raise ValueError("compute_windows: expanding windows start at 0")
+    sizes = hi - lo
+    out = {k: np.full(sizes.size, np.nan) for k in r.keys}
+    nonempty = np.flatnonzero(sizes > 0)
+    if r.exp and nonempty.size:
+        # one prefix pass over x, no gather
+        for k, v in compute_expanding(x, hi[nonempty], r.exp,
+                                      options).items():
+            if r.source.get(k) == "exp":
+                out[k][nonempty] = v
+    if not (r.gather or r.loop):
+        return out
+    csum = np.cumsum(sizes[nonempty])
+    blk_start = 0
+    while blk_start < nonempty.size:
+        base = csum[blk_start - 1] if blk_start > 0 else 0
+        blk_end = int(np.searchsorted(csum, base + _GATHER_CAP,
+                                      side="right"))
+        blk_end = max(blk_end, blk_start + 1)
+        sel = nonempty[blk_start:blk_end]
+        bsizes = sizes[sel]
+        bstarts = np.zeros(sel.size, dtype=np.int64)
+        bstarts[1:] = np.cumsum(bsizes)[:-1]
+        bends = bstarts + bsizes
+        # element j of window i reads lo[i] + (j - bstarts[i])
+        big = x[np.arange(int(bsizes.sum()), dtype=np.int64)
+                + np.repeat(lo[sel] - bstarts, bsizes)]
+        if r.gather:
+            for k, v in compute_batched(big, bstarts, bends, r.gather,
+                                        options).items():
+                if r.source.get(k) == "batched":
+                    out[k][sel] = v
+        if r.loop:
+            for gi, wi in enumerate(sel):
+                got = compute_all(big[bstarts[gi]:bends[gi]], r.loop,
+                                  options)
+                for k, v in got.items():
+                    if r.source.get(k) == "loop":
+                        out[k][wi] = v
+        blk_start = blk_end
     return out

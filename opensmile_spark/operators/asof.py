@@ -16,25 +16,28 @@ AT the anchor timestamp is visible — mirroring "frame written at t is
 readable at t").
 
 `backfill_functionals` materializes whole functional vectors at every
-(conv_id, anchor_ts) grid point using a per-conversation vectorized kernel:
-for A anchors over N turns it does one sort plus prefix scans — not A
-separate window jobs. Physically it is ONE union-tag shuffle + the shared
-sorted-group Arrow runner (sorted_groups.map_sorted_groups, the same one
-functionals_kernel uses), not a per-conversation cogroup: cogrouped
-applyInPandas pays ~0.5-1 ms of pandas dispatch PER GROUP, which at high
-conversation cardinality dominates the numpy kernel by an order of
+(conv_id, anchor_ts) grid point: for A anchors over N turns it does one sort
+plus searchsorted window bounds, then hands all A windows to the same
+functionals/batched.compute_windows that functionals_kernel uses (prefix
+scans on expanding windows) — not A separate window jobs. Physically it is
+ONE union-tag shuffle + the shared sorted-group Arrow runner
+(sorted_groups.map_sorted_groups), not a per-conversation cogroup:
+cogrouped applyInPandas pays ~0.5-1 ms of pandas dispatch PER GROUP, which
+at high conversation cardinality dominates the numpy kernel by an order of
 magnitude.
+
+`incremental_backfill` recomputes only the conversations whose watermark
+moved and carries every other conversation's rows forward; it builds a lazy
+plan and runs no Spark job until its outputs are acted on.
 """
 
 from __future__ import annotations
 
-from types import MappingProxyType
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.bank import feature_names
+from opensmile_spark.functionals.batched import compute_windows
 from opensmile_spark.sorted_groups import map_sorted_groups
 
 
@@ -99,58 +102,6 @@ def asof_join(
     return out.withColumnRenamed("__t", anchor_ts)
 
 
-@expr_memo
-def _backfill_probe(value_cols: tuple, families: tuple, options,
-                    expanding: bool):
-    """(probe keys, feature names, exp/gather/loop family routing,
-    key->source map) for backfill_functionals — derived from fixed
-    8-element compute_all probes, pure in its arguments. Memoized and
-    shared by every caller, so returned as tuples and a read-only
-    mapping."""
-    import numpy as np
-
-    from opensmile_spark.functionals.batched import (
-        BATCHED_FAMILIES, BATCHED_SUPPORTED_OPTIONS, EXPANDING_FAMILIES,
-        EXPANDING_UNSUPPORTED_KEYS,
-    )
-
-    options = options or {}
-    probe = list(compute_all(np.arange(1.0, 9.0), list(families), options))
-    feat_names = [f"{c}_{k}" for c in value_cols for k in probe]
-
-    batched_fams = [
-        f for f in families
-        if f in BATCHED_FAMILIES
-        and set(options.get(f, {})) <= BATCHED_SUPPORTED_OPTIONS[f]
-    ]
-    # sum/central-stat families on EXPANDING windows (no trailing bound)
-    # take the O(N + A) prefix/blocked-Chan path — linear, not O(sum of
-    # window sizes). Routing is per OUTPUT KEY: the two mean-|residual|
-    # regression outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly
-    # per-window, so their family additionally joins the bounded gather,
-    # which then fills ONLY those keys.
-    exp_fams = [f for f in batched_fams if f in EXPANDING_FAMILIES] \
-        if expanding else []
-    gather_fams = [f for f in batched_fams if f not in exp_fams]
-    loop_fams = [f for f in families if f not in batched_fams]
-    key_src: dict[str, str] = {}
-    for fam in families:
-        sample = compute_all(np.arange(1.0, 9.0), [fam], options)
-        src = ("exp" if fam in exp_fams else
-               "batched" if fam in batched_fams else "loop")
-        residual = False
-        for k in sample:
-            if src == "exp" and k in EXPANDING_UNSUPPORTED_KEYS:
-                key_src.setdefault(k, "batched")
-                residual = True
-            else:
-                key_src.setdefault(k, src)
-        if residual and fam not in gather_fams:
-            gather_fams.append(fam)
-    return (tuple(probe), tuple(feat_names), tuple(exp_fams),
-            tuple(gather_fams), tuple(loop_fams), MappingProxyType(key_src))
-
-
 def backfill_functionals(
     lld: DataFrame,
     anchors: DataFrame,
@@ -170,114 +121,30 @@ def backfill_functionals(
     Physical strategy: union-tag the turn and anchor tables (side 0 / 1),
     ONE repartition by conv + in-partition sort, then a single mapInArrow
     pass over complete conversations (sorted_groups.map_sorted_groups, the
-    functionals_kernel runner). Each conversation's numpy math is unchanged
-    from the cogroup formulation — same sort order, same per-conv arrays,
-    bit-identical outputs — but the Python dispatch is amortized over every
-    conversation in an Arrow batch instead of paid per conversation. Both
-    time columns are cast to TIMESTAMP, so they cross the boundary as Arrow
-    `timestamp[us, tz=<session zone>]`; the key and anchor_ts are emitted
-    from the anchor rows themselves, so their types round-trip and a NULL
-    `on` key is one conversation. Per-anchor windows are gathered into ONE
-    concatenated array and every reduceat-expressible family is computed
-    for ALL anchors at once (functionals/batched.py) — no per-anchor Python
-    dispatch; only families outside BATCHED_FAMILIES fall back to a
-    per-anchor loop.
-    Anchor blocks are chunked so the gathered array stays bounded
-    (`max_gather_elems`) regardless of anchor density. Empty windows
-    emit NaN features (anchor row is kept so the grid is complete — the
-    PAD_ZERO/PAD_NONE choice is the caller's fillna/dropna).
-
-    Cost model per family on an UNBOUNDED (expanding) grid with N turns and
-    A anchors per conversation: means/extremes/moments/percentiles and all
-    regression keys except the two |residual| means are O(N + A*B) via the
-    prefix, blocked-Chan, and offline order-statistic paths
-    (batched.compute_expanding) — every default family is linear in the
-    conversation, never O(sum of window sizes). Only the two
-    |residual|-mean regression keys keep the memory-bounded gather
-    (a per-window fit applied to every element is irreducibly
-    gather-shaped). With window_seconds set, every family gathers, but the
-    window bound caps the work.
+    functionals_kernel runner), so the Python dispatch is amortized over
+    every conversation in an Arrow batch instead of paid per conversation.
+    Both time columns are cast to TIMESTAMP, so they cross the boundary as
+    Arrow `timestamp[us, tz=<session zone>]`; the key and anchor_ts are
+    emitted from the anchor rows themselves, so their types round-trip and
+    a NULL `on` key is one conversation. Per conversation, an anchor's
+    window is its turns with anchor_ts - window_seconds <= ts <= anchor_ts,
+    found by searchsorted, and batched.compute_windows computes every
+    family over ALL anchors' windows at once per value column — no
+    per-anchor Python dispatch except for families it routes to the
+    per-window kernels; see its docstring for the cost model and the
+    memory cap. On the unbounded (expanding) grid every default family is
+    linear in the conversation. Empty windows emit NaN features (anchor row
+    is kept so the grid is complete — the PAD_ZERO/PAD_NONE choice is the
+    caller's fillna/dropna).
     """
     import numpy as np
-
-    from opensmile_spark.functionals.batched import (
-        compute_batched, compute_expanding,
-    )
 
     families = families or ["means", "moments", "extremes", "percentiles",
                             "regression"]
     options = options or {}
-    max_gather_elems = 16_000_000  # ~128 MB of float64 gather per block
+    feat_names = feature_names(value_cols, families, options)
 
-    # probe metadata is pure in (value_cols, families, options, bounded?)
-    # and costs several numpy compute_all probes — memoized (exprcache)
-    probe, feat_names, exp_fams, gather_fams, loop_fams, key_src = \
-        _backfill_probe(tuple(value_cols), tuple(families), options,
-                        window_seconds is None)
-
-    def _one_conv(ts_vals, col_arrays, anchor_vals):
-        """Per-conversation math — unchanged from the r5 cogroup
-        formulation (same op sequence on the same sorted arrays =>
-        bit-identical outputs)."""
-        # prefix positions: count of turns with ts <= anchor (searchsorted right)
-        hi = np.searchsorted(ts_vals, anchor_vals, side="right")
-        if window_seconds is not None:
-            lo = np.searchsorted(
-                ts_vals,
-                anchor_vals - np.timedelta64(int(window_seconds * 1e6), "us"),
-                side="left",
-            )
-        else:
-            lo = np.zeros_like(hi)
-
-        A = len(anchor_vals)
-        out_cols = {f"{c}_{k}": np.full(A, np.nan) for c in value_cols
-                    for k in probe}
-        sizes = (hi - lo).astype(np.int64)
-        nonempty = np.flatnonzero(sizes > 0)
-
-        # prefix-scan families: one pass over the conversation, no gather
-        if exp_fams and nonempty.size:
-            for c in value_cols:
-                ex = compute_expanding(col_arrays[c], hi[nonempty],
-                                       exp_fams, options)
-                for k, v in ex.items():
-                    if key_src.get(k) == "exp":
-                        out_cols[f"{c}_{k}"][nonempty] = v
-
-        # block anchors so the gathered windows stay within the memory cap
-        blk_start = 0
-        csum = np.cumsum(sizes[nonempty])
-        while (gather_fams or loop_fams) and blk_start < nonempty.size:
-            base = csum[blk_start - 1] if blk_start > 0 else 0
-            blk_end = int(np.searchsorted(
-                csum, base + max_gather_elems, side="right"))
-            blk_end = max(blk_end, blk_start + 1)
-            sel = nonempty[blk_start:blk_end]
-            bsizes = sizes[sel]
-            bstarts = np.zeros(sel.size, dtype=np.int64)
-            bstarts[1:] = np.cumsum(bsizes)[:-1]
-            bends = bstarts + bsizes
-            # gather index: element j of window i reads lo[i] + (j - bstarts[i])
-            gather = (np.arange(int(bsizes.sum()), dtype=np.int64)
-                      + np.repeat(lo[sel] - bstarts, bsizes))
-            for c in value_cols:
-                big = col_arrays[c][gather]
-                if gather_fams:
-                    bat = compute_batched(big, bstarts, bends,
-                                          gather_fams, options)
-                    for k, v in bat.items():
-                        if key_src.get(k) == "batched":
-                            out_cols[f"{c}_{k}"][sel] = v
-                if loop_fams:
-                    for gi, ai in enumerate(sel):
-                        got = compute_all(big[bstarts[gi]:bends[gi]],
-                                          loop_fams, options)
-                        for k, v in got.items():
-                            if key_src.get(k) == "loop":
-                                out_cols[f"{c}_{k}"][ai] = v
-            blk_start = blk_end
-        return sizes, out_cols
+    expanding = window_seconds is None
 
     def _process(batch, starts, ends):
         """All conversations in batch are complete; rows sorted by
@@ -296,12 +163,20 @@ def backfill_functionals(
             a0 = s + int(np.searchsorted(side_np[s:e], 1, side="left"))
             if a0 == e:
                 continue   # conv has turns but no anchors: no output rows
-            col_arrays = {c: vals[c][s:a0] for c in value_cols}
-            sizes, out_cols = _one_conv(t_np[s:a0], col_arrays, t_np[a0:e])
+            # an anchor sees the turns with
+            # anchor_ts - window_seconds <= ts <= anchor_ts
+            ts, at = t_np[s:a0], t_np[a0:e]
+            hi = np.searchsorted(ts, at, side="right")
+            lo = np.zeros_like(hi) if expanding else np.searchsorted(
+                ts, at - np.timedelta64(int(window_seconds * 1e6), "us"),
+                side="left")
+            for c in value_cols:
+                feats = compute_windows(vals[c][s:a0], lo, hi, families,
+                                        options, expanding)
+                for k, v in feats.items():
+                    feat_chunks[f"{c}_{k}"].append(v)
             anchor_rows.append(np.arange(a0, e))
-            size_chunks.append(sizes)
-            for f in feat_names:
-                feat_chunks[f].append(out_cols[f])
+            size_chunks.append(hi - lo)
         if not anchor_rows:
             return None
         rows = np.concatenate(anchor_rows)
@@ -389,14 +264,8 @@ def incremental_backfill(
     at (conv, anchor) depend only on that conv's rows — conversations are
     independent, so an untouched conv's rows cannot change.
     """
-    # localCheckpoint materializes the per-conv watermark aggregate and
-    # BREAKS its lineage from `lld` — the production shape anyway (the
-    # watermark table is persisted each run and read back next run), and
-    # without it every stale-set join back onto `lld`/`anchors` trips
-    # Spark's ambiguous-self-join check on the shared scan attributes
-    cur_max = (lld.groupBy(on).agg(F.max(ts_col).alias("__cur_max_ts"),
-                                   F.count(F.lit(1)).alias("__cur_n"))
-               .localCheckpoint(eager=True))
+    cur_max = lld.groupBy(on).agg(F.max(ts_col).alias("__cur_max_ts"),
+                                  F.count(F.lit(1)).alias("__cur_n"))
     prev = prev_max_ts.withColumnRenamed("max_ts", "__prev_max")
     changed = (F.col("__prev_max").isNull()
                | (F.col("__cur_max_ts") != F.col("__prev_max")))
@@ -411,21 +280,14 @@ def incremental_backfill(
 
     def only_stale(df, how):
         # DataFrame-bound column refs: the stale side shares lineage with
-        # `lld` (it derives from the same scan), and both the lld and
-        # anchor sides pass through here before being cogrouped — string
-        # or alias-based join columns trip Spark's ambiguous-self-join
-        # check on the shared attributes, instance-bound ones do not
+        # `lld` (it derives from the same scan), and string or alias-based
+        # join columns trip Spark's ambiguous-self-join check on the shared
+        # attributes, instance-bound ones do not
         return df.join(F.broadcast(stale_k),
                        df[on] == stale_k["__stale_key"], how)
 
-    # the restricted slices are MATERIALIZED (localCheckpoint) before the
-    # cogroup: (a) Spark's ambiguous-self-join check false-positives on a
-    # cogroup whose two children both carry joins over a shared scan, and
-    # (b) the materialized working set is proportional to the CHANGED
-    # conversations — the thing an incremental refresh is sized by anyway
     fresh_feats = backfill_functionals(
-        only_stale(lld, "left_semi").localCheckpoint(eager=True),
-        only_stale(anchors, "left_semi").localCheckpoint(eager=True),
+        only_stale(lld, "left_semi"), only_stale(anchors, "left_semi"),
         value_cols, families, options, window_seconds,
         on, anchor_ts, ts_col, order_col,
     )

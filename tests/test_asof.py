@@ -174,8 +174,7 @@ def test_incremental_backfill_equals_full(spark):
     for c in sorted(a.columns):
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         if av.dtype.kind == "f":
-            import numpy as np
-            assert np.allclose(av, bv, equal_nan=True), c
+            assert av.tobytes() == bv.tobytes(), c
         else:
             assert (av == bv).all(), c
 
@@ -228,12 +227,39 @@ def test_incremental_backfill_detects_deletion(spark):
     a = inc.toPandas().sort_values(key).reset_index(drop=True)
     b = full.toPandas().sort_values(key).reset_index(drop=True)
     assert len(a) == len(b)
-    import numpy as np
     for c in sorted(a.columns):
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         if av.dtype.kind == "f":
-            assert np.allclose(av, bv, equal_nan=True), c
+            assert av.tobytes() == bv.tobytes(), c
         else:
             assert (av == bv).all(), c
     n2 = {r["conv_id"]: r["n_rows"] for r in max2.collect()}
     assert n2 == {"a": 3, "b": 3}
+
+
+def test_incremental_backfill_builds_without_jobs(spark):
+    """Building the refresh is lazy: no Spark job runs until its outputs
+    are acted on, so a caller pays for the stale-set aggregate, the
+    recompute and the carry-forward once, in its own write."""
+    from opensmile_spark.operators.asof import incremental_backfill
+
+    lld = make_conv(spark, "a", [1, 2, 3]).unionByName(
+        make_conv(spark, "b", [4, 5]))
+    anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
+    day1 = make_conv(spark, "b", [4, 5])
+    prev_feats = backfill_functionals(
+        day1, day1.select("conv_id", F.col("ts").alias("anchor_ts")), ["x"],
+        families=["means"])
+    prev_max = day1.groupBy("conv_id").agg(
+        F.max("ts").alias("max_ts"), F.count(F.lit(1)).alias("n_rows"))
+    sc = spark.sparkContext
+    sc.setJobGroup("incremental-build", "build incremental_backfill")
+    try:
+        features, max_ts = incremental_backfill(
+            prev_feats, prev_max, lld, anchors, ["x"], families=["means"])
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "incremental-build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert features.count() == 5 and max_ts.count() == 2

@@ -3,10 +3,16 @@
 import numpy as np
 import pytest
 
-from opensmile_spark.functionals.batched import BATCHED_FAMILIES, compute_batched
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.batched import (BATCHED_SUPPORTED_OPTIONS,
+                                                 compute_batched)
+from opensmile_spark.functionals.kernels import FAMILIES, compute_all
 
-FAMS = sorted(BATCHED_FAMILIES)
+FAMS = sorted(FAMILIES)
+
+
+def test_supported_options_cover_every_family():
+    """Every kernel family has a batched twin, and nothing else does."""
+    assert set(BATCHED_SUPPORTED_OPTIONS) == set(FAMILIES)
 
 
 def make_groups(rng, n_groups=40):
@@ -561,9 +567,60 @@ def test_expanding_select_dense_matches(monkeypatch):
                     np.clip(np.floor(idxf).astype(np.int64), 0, his - 1) + 1)
                 targets.append(
                     np.clip(np.ceil(idxf).astype(np.int64), 0, his - 1) + 1)
-            monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", 1 << 60)
-            dense = batched._expanding_select(x, his, targets)
-            monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", -1)
-            machinery = batched._expanding_select(x, his, targets)
-            for d, m in zip(dense, machinery):
-                assert d.tobytes() == m.tobytes(), (n, x[:8])
+            # float32 input: both paths return float64 all the same
+            for xx in (x, x.astype(np.float32)):
+                monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", 1 << 60)
+                dense = batched._expanding_select(xx, his, targets)
+                monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", -1)
+                machinery = batched._expanding_select(xx, his, targets)
+                for d, m in zip(dense, machinery):
+                    assert d.dtype == m.dtype == np.float64, xx.dtype
+                    assert d.tobytes() == m.tobytes(), (n, xx[:8])
+
+
+@pytest.mark.parametrize("case", ["tiling", "bounded", "expanding"])
+def test_compute_windows_blocking_is_invisible(monkeypatch, case):
+    """compute_windows splits its gather into blocks of at most _GATHER_CAP
+    elements; a tiny cap that forces many blocks must give the same bits
+    as one block, on the bank's tiling groups, on overlapping bounded
+    windows (with empty ones), and on expanding windows that mix the
+    prefix path, the gathered |residual| keys and a loop-routed family."""
+    from opensmile_spark.functionals import batched
+
+    rng = np.random.RandomState(31)
+    x, starts, ends = make_groups(rng)
+    fams = ["means", "percentiles", "regression", "peaks2"]
+    opts = None
+    expanding = False
+    if case == "tiling":
+        lo, hi = starts, ends
+    elif case == "bounded":
+        hi = np.sort(rng.randint(0, x.size + 1, 60))
+        lo = np.maximum(hi - rng.randint(0, 40, hi.size), 0)
+    else:
+        hi = np.sort(rng.randint(0, x.size + 1, 60))
+        lo = np.zeros_like(hi)
+        fams = ["regression", "means", "onset"]
+        opts = {"onset": {"thresholdOnset": 0.5}}
+        expanding = True
+        r = batched.route(fams, opts, expanding)
+        assert (r.source["amean"], r.source["linregerrA"],
+                r.source["onsetPos"]) == ("exp", "batched", "loop")
+    whole = batched.compute_windows(x, lo, hi, fams, opts, expanding)
+    assert int((hi - lo).sum()) <= batched._GATHER_CAP
+    monkeypatch.setattr(batched, "_GATHER_CAP", 50)
+    split = batched.compute_windows(x, lo, hi, fams, opts, expanding)
+    assert list(split) == list(whole) == list(
+        compute_all(np.arange(1.0, 9.0), fams, opts))
+    for k in whole:
+        assert whole[k].dtype == np.float64
+        assert whole[k].tobytes() == split[k].tobytes(), k
+    # and each window equals the per-window kernel
+    for i in range(hi.size):
+        want = compute_all(x[lo[i]:hi[i]], fams, opts)
+        for k in whole:
+            if hi[i] == lo[i]:
+                assert np.isnan(whole[k][i]), k
+            else:
+                assert np.isclose(whole[k][i], want[k], rtol=1e-7,
+                                  atol=1e-6), (i, k)

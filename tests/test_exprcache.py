@@ -57,27 +57,31 @@ def test_expr_memo_unhashable_falls_through():
 
 
 def test_memoized_probes_are_immutable():
-    """The kernel and backfill probes are memoized, so every caller (and
-    every runner callback closing over them) shares one result: a mutation
-    attempt must raise instead of poisoning later queries."""
-    from opensmile_spark.functionals.bank import _kernel_probe
-    from opensmile_spark.operators.asof import _backfill_probe
+    """The functional router is memoized, so every caller (and every runner
+    callback that consults it) shares one result: a mutation attempt must
+    raise instead of poisoning later queries."""
+    from opensmile_spark.functionals.batched import route
 
     fams = ("means", "regression", "peaks2")
-    probes = [_kernel_probe(("x",), fams, None),
-              _backfill_probe(("x",), fams, None, True)]
+    probes = [route(fams, None, False), route(fams, None, True)]
     for probe in probes:
-        *seqs, key_src = probe
+        with pytest.raises(TypeError):
+            probe[0] = "poison"
+        with pytest.raises(AttributeError):
+            probe.keys = ()
+        seqs = [probe.keys, *probe[2:]]
         for seq in seqs:
             with pytest.raises((AttributeError, TypeError)):
                 seq.append("poison")
             with pytest.raises(TypeError):
                 seq[0] = "poison"
         with pytest.raises(TypeError):
-            key_src["x_amean"] = "poison"
+            probe.source["amean"] = "poison"
         with pytest.raises((AttributeError, TypeError)):
-            key_src.clear()
-    assert _kernel_probe(("x",), fams, None) is probes[0]
+            probe.source.clear()
+    assert route(fams, None, False) is probes[0]
+    assert probes[1].source["amean"] == "exp"
+    assert probes[1].source["linregerrA"] == "batched"
 
 
 ADVERSARIAL = {
